@@ -118,3 +118,42 @@ def test_api_cache_hit_rate_user_filter_independent(api):
     api.usage(users=["u1"], **win, **shape)
     api.usage(users=["u2"], **win, **shape)
     assert (api.cache.misses, api.cache.hits) == (3, 4)
+
+
+def _spark_jobs(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` ran, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"test_api:{group}"  # the session is shared across test modules
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store fills from the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cache_hit_runs_no_spark_jobs(spark, api):
+    """Cached values are plain driver data: a hit for /api/usage or
+    /api/table runs zero Spark jobs. A miss runs one roll-up aggregate
+    (AQE submits its shuffle map stage and its result as two jobs),
+    plus one axis job the first time a window is seen in a data
+    generation; the per-cluster clamp is collected once."""
+    win = dict(start_ms=DAY1 - 86_400_000, end_ms=DAY1 + 3 * 86_400_000)
+    shape = dict(unit="DAYS", zone="UTC", cluster="c1")
+    assert _spark_jobs(spark, "cold", lambda: api.usage(users=["u1"], **win, **shape)) > 0
+    assert _spark_jobs(spark, "hit-usage", lambda: api.usage(
+        users=["u2"], users_to_aggregate=["u1", "u3"], **win, **shape)) == 0
+    assert _spark_jobs(spark, "hit-table", lambda: api.table_csv(users=["u3", "u0"], **win, **shape)) == 0
+    # a new metric on a known window: the roll-up aggregate only
+    rollup = _spark_jobs(spark, "new-metric", lambda: api.usage(users=["u1"], metric="cpuTotal", **win, **shape))
+    assert 1 <= rollup <= 2
+    # a new window on a cached roll-up: one axis job, clamp memoized
+    assert _spark_jobs(spark, "new-window", lambda: api.table_csv(
+        users=["u1"], start_ms=DAY1, end_ms=DAY1 + 2 * 86_400_000, **shape)) == 1
+    assert _spark_jobs(spark, "dims", lambda: (api.users("c1"), api.clusters())) > 0
+    assert _spark_jobs(spark, "dims-hit", lambda: (api.users("c1"), api.clusters())) == 0
+    # a data load invalidates roll-ups and lookups alike
+    api.on_data_loaded()
+    assert _spark_jobs(spark, "reloaded", lambda: api.usage(users=["u1"], **win, **shape)) > 0

@@ -280,9 +280,16 @@ def test_soak_mixed_load_with_midflight_refresh(spark, tmp_path):
     lock = threading.Lock()
 
     def worker(seed: int) -> None:
-        for i in range(12):
+        # Cache hits answer in milliseconds, so a fixed request count
+        # can finish before the refresh lands: keep issuing until this
+        # worker has sent 4 requests past the barrier (time-bounded).
+        deadline = _time.monotonic() + 120
+        i = post = 0
+        while (i < 12 or post < 4) and _time.monotonic() < deadline:
             unit = ("HOURS", "DAYS")[(seed + i) % 2]
             after = refreshed.is_set()  # sampled BEFORE issuing
+            i += 1
+            post += after
             try:
                 if (seed + i) % 3 == 2:
                     status, _, body = _get(base + "/api/table?" + qs.format(unit=unit))

@@ -107,10 +107,6 @@ def _serving_api(spark, sf_dir: str):
 def cmd_api(args: argparse.Namespace) -> int:
     """Answer one reference API request shape from the cube
     (server/app.rb:32-157): clusters | users | usage | table."""
-    from datetime import timezone
-
-    from pyspark.sql import functions as F
-
     spark = _spark()
     api = _serving_api(spark, args.sf_dir)
     if args.endpoint == "clusters":
@@ -122,15 +118,10 @@ def cmd_api(args: argparse.Namespace) -> int:
         print(json.dumps(api.users(cluster)))
         return 0
     users = args.users.split(",") if args.users else api.users(cluster)[:10]
-    # Default window = the cube's full range (the A10 clamp).
-    mm = (
-        api.cube.filter(F.col("cluster") == cluster)
-        .agg(F.min("time").alias("lo"), F.max("time").alias("hi"))
-        .collect()[0]
-    )
-    to_ms = lambda d: int(d.replace(tzinfo=timezone.utc).timestamp() * 1000)  # noqa: E731
-    start_ms = args.start_ms if args.start_ms is not None else to_ms(mm["lo"])
-    end_ms = args.end_ms if args.end_ms is not None else to_ms(mm["hi"])
+    # Default window = the cube's full range (the memoized A10 clamp).
+    lo, hi = api.time_range(cluster)
+    start_ms = args.start_ms if args.start_ms is not None else lo
+    end_ms = args.end_ms if args.end_ms is not None else hi
     if args.endpoint == "usage":
         rest = [u for u in api.users(cluster) if u not in users]
         print(
@@ -169,9 +160,10 @@ def cmd_serve(args: argparse.Namespace) -> int:
     from white_elephant_spark.server import make_server
     from white_elephant_spark.session import get_spark
 
-    # FAIR scheduling for the daemon: each request runs small Spark
-    # jobs from its handler thread; FIFO queues every in-flight
-    # request behind whichever job arrived first. The mode alone is
+    # FAIR scheduling for the daemon: a request whose roll-up or axis
+    # is not cached runs small Spark jobs from its handler thread;
+    # FIFO queues every such request behind whichever job arrived
+    # first. The mode alone is
     # not enough — without pool assignments every job lands in the
     # single 'default' pool, which schedules FIFO internally — so the
     # server additionally tags each request with a per-thread

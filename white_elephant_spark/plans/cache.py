@@ -10,74 +10,80 @@ two deliberate design points preserved here:
    (usage_data.rb:62-68), so one cached roll-up serves any user
    selection.
 2. **Invalidation on data load** (usage_loader.rb:195-196): the
-   loader bumps a generation counter; stale entries are dropped
-   lazily.
+   loader bumps a generation counter and the stale entries are
+   dropped.
 
-Spark realization: the cached value is a **persisted DataFrame** (the
-grouped cube for one (cluster, unit, zone, metric) shape), so a hit
-costs one in-memory scan and the follow-up user filter/shaping stays
-distributed. Entries are LRU-bounded (the reference's unbounded cache
-is a leak at scale) and unpersisted on eviction/invalidation.
+Spark realization: the cached value is a **plain driver value** (for
+a roll-up, the collected ``{user: {bucket: value}}`` of one (cluster,
+unit, zone, metric) shape), as the reference's JVM-heap memo holds
+result rows. A hit therefore runs no Spark job at all; the follow-up
+user filter and shaping are a few thousand points of driver work.
+Entries are LRU-bounded (the reference's unbounded cache is a leak at
+scale); nothing is persisted, so eviction and invalidation just drop
+references.
 """
 
 from __future__ import annotations
 
 import threading
 from collections import OrderedDict
-from typing import Callable
+from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame
+V = TypeVar("V")
 
 
 class QueryCache:
-    """Thread-safe: the HTTP daemon serves concurrent handler threads
-    against one cache, so mutation of the LRU map and generation
-    counter is serialized under an RLock. ``build()`` itself runs
-    under the lock too — concurrent misses on the same key must not
-    both ``persist()`` (the loser's frame would leak in the block
-    manager); Spark job parallelism is unaffected since the built
-    DataFrame's *actions* happen outside the cache."""
+    """Thread-safe LRU memo of driver values: the HTTP daemon serves
+    concurrent handler threads against one cache, so the map and the
+    generation counter change only under a lock. ``build()`` runs
+    OUTSIDE the lock — it issues Spark jobs, and holding the lock
+    would queue every hit behind a miss. Two concurrent misses on one
+    key may both build; the second store replaces the first, which
+    wastes one job and leaks nothing. A build that started before an
+    :meth:`invalidate` is returned to its own caller but never
+    stored, so no later request is served pre-refresh data.
+
+    Values are shared between callers and must be treated as
+    read-only."""
 
     def __init__(self, max_entries: int = 64):
         self.max_entries = max_entries
-        self._entries: OrderedDict[tuple, tuple[int, DataFrame]] = OrderedDict()
+        self._entries: OrderedDict[tuple, object] = OrderedDict()
         self._generation = 0
-        self._lock = threading.RLock()
+        self._lock = threading.Lock()
         self.hits = 0
         self.misses = 0
 
-    def get_or_build(self, key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
-        """Return the persisted DataFrame for ``key``, building (and
-        persisting) it on miss. ``key`` must exclude per-request
-        selections that are applied post-cache (the user list)."""
+    def get_or_build(self, key: tuple, build: Callable[[], V]) -> V:
+        """Return the value for ``key``, building it on miss. ``key``
+        must exclude per-request selections that are applied
+        post-cache (the user list)."""
         with self._lock:
-            hit = self._entries.get(key)
-            if hit is not None and hit[0] == self._generation:
+            if key in self._entries:
                 self._entries.move_to_end(key)
                 self.hits += 1
-                return hit[1]
-            if hit is not None:  # stale generation
-                hit[1].unpersist()
-                del self._entries[key]
+                return self._entries[key]
             self.misses += 1
-            df = build().persist()
-            self._entries[key] = (self._generation, df)
-            while len(self._entries) > self.max_entries:
-                _, (_, old) = self._entries.popitem(last=False)
-                old.unpersist()
-            return df
+            generation = self._generation
+        value = build()
+        with self._lock:
+            if generation == self._generation:
+                self._entries[key] = value
+                self._entries.move_to_end(key)
+                while len(self._entries) > self.max_entries:
+                    self._entries.popitem(last=False)
+        return value
 
     def invalidate(self) -> None:
-        """I4 — called after a data load: all cached results are
-        stale (usage_loader.rb:195-196). Lazy: entries unpersist on
-        next touch or via clear()."""
+        """I4 — called after a data load: every cached result is
+        stale (usage_loader.rb:195-196). Drops the entries and bumps
+        the generation, so builds still in flight are not stored."""
         with self._lock:
             self._generation += 1
+            self._entries.clear()
 
     def clear(self) -> None:
         with self._lock:
-            for _, df in self._entries.values():
-                df.unpersist()
             self._entries.clear()
 
 

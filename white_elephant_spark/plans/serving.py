@@ -19,6 +19,10 @@ Reproduces the reference's ``get_time_range`` dense-axis construction
 
 Axis generation is ``sequence``+``explode`` on one driver row —
 distributed, no Python loops; buckets stay naive-UTC instants.
+:func:`timeseries` and :func:`csv_table` are steps 3-4 as Spark plans
+(the registry's serving queries); the HTTP API (plans/api.py) instead
+collects the roll-up and the axis once per data generation and shapes
+replies on the driver.
 """
 
 from __future__ import annotations
@@ -111,6 +115,12 @@ def dense_axis(
     )
 
 
+def local_date_label(bucket: Column, zone: str) -> Column:
+    """``/api/table``'s row label: the local %Y-%m-%d date of a
+    naive-UTC bucket (app.rb:136-156)."""
+    return F.date_format(F.from_utc_timestamp(bucket.cast("timestamp"), zone), "yyyy-MM-dd")
+
+
 def clamp_range(usage: DataFrame, time_col: str = "time") -> DataFrame:
     """A10 — 1-row (min_ms, max_ms) clamp frame from the cube."""
     return usage.agg(
@@ -141,10 +151,11 @@ def timeseries(
         parts.append(agg)
     combined = parts[0] if len(parts) == 1 else parts[0].unionAll(parts[1])
     names = users + ([other_label] if users_to_aggregate else [])
-    axis_users = axis.crossJoin(
-        F.broadcast(
-            combined.sparkSession.createDataFrame([(u,) for u in names], "userName string")
-        )
+    # axis x names as a literal-array projection: no driver-side
+    # DataFrame (and no Python worker) for a handful of names
+    axis_users = axis.select(
+        "bucket",
+        F.explode(F.array(*[F.lit(u) for u in names]).cast("array<string>")).alias("userName"),
     )
     return axis_users.join(combined, ["bucket", "userName"], "left").select(
         "userName",
@@ -172,7 +183,7 @@ def csv_table(
         .sum("value")
     )
     out = pivoted.select(
-        F.date_format(F.from_utc_timestamp(F.col("bucket").cast("timestamp"), zone), "yyyy-MM-dd").alias("time"),
+        local_date_label(F.col("bucket"), zone).alias("time"),
         *[F.coalesce(F.col(u), F.lit(0.0)).alias(u) for u in users],
     )
     return out.orderBy("time")

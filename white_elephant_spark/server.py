@@ -18,10 +18,11 @@ required and its absence is a 500 (``halt 500``, not a 400 — kept
 verbatim for parity); ``user`` / ``users_to_aggregate`` are
 comma-split with order-preserving de-dup (Ruby ``split(",").uniq``);
 ``start`` / ``end`` are epoch-ms integers; ``type`` is the metric
-name. Everything heavy stays in Spark — each handler thread issues
-DataFrame actions against the shared session (the Spark driver is
-thread-safe). Under ``spark.scheduler.mode=FAIR`` each handler tags
-its jobs with a per-request scheduler pool (see ``_route``) so
+name. Replies are shaped on the driver from :class:`UsageApi`'s
+memoized values; a handler thread runs Spark jobs against the shared
+session (the Spark driver is thread-safe) only to build a value that
+is not cached yet. Under ``spark.scheduler.mode=FAIR`` each handler
+tags its jobs with a per-request scheduler pool (see ``_route``) so
 concurrent requests round-robin instead of queueing FIFO.
 
 Deviations, both documented non-goals (SURVEY §7): ``GET /`` returns
@@ -35,6 +36,7 @@ from __future__ import annotations
 
 import itertools
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Callable
@@ -42,6 +44,8 @@ from urllib.parse import parse_qs, urlparse
 
 from white_elephant_spark.plans.api import UsageApi
 from white_elephant_spark.plans.cache import ReadWriteLock
+
+_log = logging.getLogger(__name__)
 
 _INDEX = {
     "endpoints": [
@@ -146,16 +150,18 @@ def make_server(
     def _tag_scheduler_pool() -> None:
         if not scheduler_pools:
             return
+        idx = getattr(_pool_idx, "idx", None)
+        if idx is None:
+            idx = next(_pool_seq) % _SCHEDULER_POOLS
+            _pool_idx.idx = idx
         try:
-            idx = getattr(_pool_idx, "idx", None)
-            if idx is None:
-                idx = next(_pool_seq) % _SCHEDULER_POOLS
-                _pool_idx.idx = idx
             api.spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", f"req-{idx}"
             )
-        except Exception:
-            pass  # a mocked/closed session must not fail the route
+        except AttributeError:
+            pass  # a mocked or stopped session has no context to tag
+        except Exception:  # tagging is advisory: serve the route untagged
+            _log.warning("could not tag the request's scheduler pool", exc_info=True)
 
     class Handler(BaseHTTPRequestHandler):
         server_version = "white-elephant-spark"
