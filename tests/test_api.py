@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from white_elephant_spark.plans.api import UsageApi
 
 HOUR = 3_600_000
+MINUTE = 60_000
 DAY1 = 1714521600000  # 2024-05-01 00:00 UTC
 
 
@@ -15,25 +16,25 @@ DAY1 = 1714521600000  # 2024-05-01 00:00 UTC
 def api(spark):
     rows = []
     for h, user, minutes in [
-        (-48, "u0", 1.0),  # 2024-04-29: widens the A10 clamp range so
-        (96, "u0", 1.0),   # 2024-05-05  interior-day axes are non-empty
-        (0, "u1", 60.0),
-        (1, "u1", 30.0),
-        (0, "u2", 10.0),
-        (30, "u3", 5.0),  # next day
+        (-48, "u0", 1),  # 2024-04-29: widens the A10 clamp range so
+        (96, "u0", 1),   # 2024-05-05  interior-day axes are non-empty
+        (0, "u1", 60),
+        (1, "u1", 30),
+        (0, "u2", 10),
+        (30, "u3", 5),  # next day
     ]:
-        rows.append(("c1", user, DAY1 + h * HOUR, "MAP", "SUCCESS", False, minutes))
+        rows.append(("c1", user, DAY1 + h * HOUR, "MAP", "SUCCESS", False, minutes * MINUTE))
     cube = spark.createDataFrame(
         rows,
         "cluster string, user string, t long, type string, status string,"
-        " excess boolean, elapsedMinutes double",
+        " excess boolean, elapsedMs long",
     ).select(
         "cluster", "user",
         F.timestamp_millis(F.col("t")).cast("timestamp_ntz").alias("time"),
-        "type", "status", "excess", "elapsedMinutes",
-        F.col("elapsedMinutes").alias("cpuMinutes"),
-        F.lit(1).alias("started"), F.lit(1).alias("finished"),
-        F.lit(0).alias("reduceShuffleBytes"),
+        "type", "status", "excess", "elapsedMs",
+        F.col("elapsedMs").alias("cpuMsProrated"),
+        F.lit(1).cast("long").alias("started"), F.lit(1).cast("long").alias("finished"),
+        F.lit(0).cast("long").alias("reduceShuffleBytes"),
     )
     return UsageApi(spark, cube)
 

@@ -15,6 +15,7 @@ from white_elephant_spark.plans.api import UsageApi
 from white_elephant_spark.server import make_server
 
 HOUR = 3_600_000
+MINUTE = 60_000
 DAY1 = 1714521600000  # 2024-05-01 00:00 UTC
 
 
@@ -22,25 +23,25 @@ DAY1 = 1714521600000  # 2024-05-01 00:00 UTC
 def api(spark):
     rows = []
     for h, user, minutes in [
-        (-48, "u0", 1.0),
-        (96, "u0", 1.0),
-        (0, "u1", 60.0),
-        (1, "u1", 30.0),
-        (0, "u2", 10.0),
-        (30, "u3", 5.0),
+        (-48, "u0", 1),
+        (96, "u0", 1),
+        (0, "u1", 60),
+        (1, "u1", 30),
+        (0, "u2", 10),
+        (30, "u3", 5),
     ]:
-        rows.append(("c1", user, DAY1 + h * HOUR, "MAP", "SUCCESS", False, minutes))
+        rows.append(("c1", user, DAY1 + h * HOUR, "MAP", "SUCCESS", False, minutes * MINUTE))
     cube = spark.createDataFrame(
         rows,
         "cluster string, user string, t long, type string, status string,"
-        " excess boolean, elapsedMinutes double",
+        " excess boolean, elapsedMs long",
     ).select(
         "cluster", "user",
         F.timestamp_millis(F.col("t")).cast("timestamp_ntz").alias("time"),
-        "type", "status", "excess", "elapsedMinutes",
-        F.col("elapsedMinutes").alias("cpuMinutes"),
-        F.lit(1).alias("started"), F.lit(1).alias("finished"),
-        F.lit(0).alias("reduceShuffleBytes"),
+        "type", "status", "excess", "elapsedMs",
+        F.col("elapsedMs").alias("cpuMsProrated"),
+        F.lit(1).cast("long").alias("started"), F.lit(1).cast("long").alias("finished"),
+        F.lit(0).cast("long").alias("reduceShuffleBytes"),
     )
     return UsageApi(spark, cube)
 
@@ -222,25 +223,25 @@ def test_soak_mixed_load_with_midflight_refresh(spark, tmp_path):
 
     src = str(tmp_path / "cube.parquet")
 
-    def _write(scale: float, path: str) -> None:
+    def _write(scale: int, path: str) -> None:
         rows = []
         # span 3 days so the DAYS unit has a non-empty interior-days
         # axis (reference quirk: interior buckets only, clamped)
         for h, user, minutes in [
-            (0, "u1", 60.0), (25, "u1", 30.0), (49, "u1", 20.0), (0, "u2", 10.0),
+            (0, "u1", 60), (25, "u1", 30), (49, "u1", 20), (0, "u2", 10),
         ]:
-            rows.append(("c1", user, DAY1 + h * HOUR, "MAP", "SUCCESS", False, minutes * scale))
+            rows.append(("c1", user, DAY1 + h * HOUR, "MAP", "SUCCESS", False, minutes * scale * MINUTE))
         spark.createDataFrame(
             rows,
             "cluster string, user string, t long, type string, status string,"
-            " excess boolean, elapsedMinutes double",
+            " excess boolean, elapsedMs long",
         ).select(
             "cluster", "user",
             F.timestamp_millis(F.col("t")).cast("timestamp_ntz").alias("time"),
-            "type", "status", "excess", "elapsedMinutes",
-            F.col("elapsedMinutes").alias("cpuMinutes"),
-            F.lit(1).alias("started"), F.lit(1).alias("finished"),
-            F.lit(0).alias("reduceShuffleBytes"),
+            "type", "status", "excess", "elapsedMs",
+            F.col("elapsedMs").alias("cpuMsProrated"),
+            F.lit(1).cast("long").alias("started"), F.lit(1).cast("long").alias("finished"),
+            F.lit(0).cast("long").alias("reduceShuffleBytes"),
         ).coalesce(1).write.mode("overwrite").parquet(path)
 
     def _swap_in(staging: str) -> None:
@@ -254,7 +255,7 @@ def test_soak_mixed_load_with_midflight_refresh(spark, tmp_path):
         os.rename(staging, src)
         shutil.rmtree(old)
 
-    _write(1.0, src)
+    _write(1, src)
     api = UsageApi(spark, spark.read.parquet(src))
     api.cube.persist().count()
 
@@ -271,7 +272,7 @@ def test_soak_mixed_load_with_midflight_refresh(spark, tmp_path):
         f"start={DAY1 - 86_400_000}&end={DAY1 + 3 * 86_400_000}&unit={{unit}}"
         "&zone=UTC&user=u1&users_to_aggregate=u2&cluster=c1&type=minutesTotal"
     )
-    # u1's total per unit at scale 2.0: HOURS sees all three rows;
+    # u1's total per unit at scale 2: HOURS sees all three rows;
     # interior-days DAYS sees only the 05-02 bucket (30.0 doubled)
     v2_expected = {"HOURS": 220.0, "DAYS": 60.0}
     refreshed = threading.Event()
@@ -315,7 +316,7 @@ def test_soak_mixed_load_with_midflight_refresh(spark, tmp_path):
     for t in threads:
         t.start()
     staging = str(tmp_path / "staging.parquet")
-    _write(2.0, staging)  # doubled values, written out-of-band
+    _write(2, staging)  # doubled values, written out-of-band
     _time.sleep(0.5)  # let the load build
     _swap_in(staging)  # rewrite the corpus mid-flight
     req = urllib.request.Request(base + "/api/refresh", data=b"{}")

@@ -227,9 +227,8 @@ def test_hour_explode_proration(spark):
     assert (b0.started, b0.finished) == (1, 0)
     # finished books into the PRECEDING hour for boundary-aligned end
     assert (b1.started, b1.finished) == (0, 1)
-    assert b0.elapsedMinutes == 30.0 and b1.elapsedMinutes == 60.0
-    # proration: 1/3 vs 2/3 of the span
-    assert abs(b0.cpuMinutes - (1 / 3) * 2.0) < 1e-12
+    # proration: 1/3 vs 2/3 of the span's 120 s of CPU
+    assert b0.cpuMsProrated == 40_000 and b1.cpuMsProrated == 80_000
     assert b0.spilledRecords == 333 and b1.spilledRecords == 666  # floor per bucket
     # quirk 1: reduceShuffleBytes NOT prorated — full value each bucket
     assert b0.reduceShuffleBytes == 777 and b1.reduceShuffleBytes == 777
@@ -252,11 +251,12 @@ def test_elapsed_sums_to_attempt_duration(spark):
 
 
 def test_cube_null_preserving_cpu(spark):
-    # all-null cpu counters → cpuMinutes stays NULL after aggregation
+    # all-null cpu counters → cpuMsProrated stays NULL after aggregation
     df = _attempts_df(spark, [("u", "c", False, "MAP", "SUCCESS", T0, T0 + 1000, {})])
-    cube = usage.build_usage_per_hour(df.withColumn("taskStatus", F.lit("SUCCESS"))).collect()
-    assert cube[0].cpuMinutes is None
-    assert cube[0].elapsedMinutes == pytest.approx(1000 / 60000)
+    rows = usage.explode_attempt_hours(usage.filter_usable_attempts(df))
+    cube = usage.aggregate_usage_exact(rows).collect()
+    assert cube[0].cpuMsProrated is None
+    assert cube[0].elapsedMs == 1000
 
 
 # ------------------------------------------------------- raw log file scan

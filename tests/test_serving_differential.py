@@ -1,4 +1,4 @@
-"""Serving-path differential over a hostile hand-built cube.
+"""Serving-path differential over a hostile hand-built exact cube.
 
 ``UsageApi.usage`` / ``table_csv`` shape replies on the driver from
 memoized roll-ups and axes. This suite checks them against the Spark
@@ -42,6 +42,7 @@ METRIC = "minutesTotal"
 SHOWN = ["tie_a", "ghost", "heavy"]
 AGGREGATED = ["tie_b", "light", "nobody"]
 TABLE_USERS = ["tie_b", "ghost", "heavy", "tie_a"]
+MINUTE = 60_000
 
 
 def _ms(*args) -> int:
@@ -88,20 +89,21 @@ def _rows() -> list[tuple]:
         rows.append(("c2", "ghost", t + 3_600_000, "MAP", "SUCCESS", 100.0 + i))
         rows.append(("c2", "heavy", t, "MAP", "SUCCESS", 1000.0))
     rows.append(("c2", "ghost", _ms(2023, 1, 1), "MAP", "SUCCESS", 5.0))  # widens c2's clamp only
-    return rows
+    # minutes → the cube's exact integer ms
+    return [(*r[:-1], round(r[-1] * MINUTE)) for r in rows]
 
 
 @pytest.fixture(scope="module")
 def cube(spark):
     return spark.createDataFrame(
-        _rows(), "cluster string, user string, t long, type string, status string, elapsedMinutes double"
+        _rows(), "cluster string, user string, t long, type string, status string, elapsedMs long"
     ).select(
         "cluster", "user",
         F.timestamp_millis(F.col("t")).cast("timestamp_ntz").alias("time"),
-        "type", "status", F.lit(False).alias("excess"), "elapsedMinutes",
-        F.col("elapsedMinutes").alias("cpuMinutes"),
-        F.lit(1).alias("started"), F.lit(1).alias("finished"),
-        F.lit(0).alias("reduceShuffleBytes"),
+        "type", "status", F.lit(False).alias("excess"), "elapsedMs",
+        F.col("elapsedMs").alias("cpuMsProrated"),
+        F.lit(1).cast("long").alias("started"), F.lit(1).cast("long").alias("finished"),
+        F.lit(0).cast("long").alias("reduceShuffleBytes"),
     )
 
 

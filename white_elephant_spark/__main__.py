@@ -92,16 +92,12 @@ def cmd_profile(args: argparse.Namespace) -> int:
 
 
 def _serving_api(spark, sf_dir: str):
-    """The UsageApi over the serving cube (minutes-typed A3 measures;
-    the integer-exact twin exists for oracle hashing, not the API)."""
-    from white_elephant_spark.operators import reconstruct, usage
+    """The UsageApi over the hourly cube the ``usage_cube_hourly``
+    query builds — the same exact-integer cube refresh writes."""
     from white_elephant_spark.plans.api import UsageApi
-    from white_elephant_spark.plans.pipeline_queries import _attempts_from_events
+    from white_elephant_spark.plans.pipeline_queries import usage_cube_hourly
 
-    cube = usage.build_usage_per_hour(
-        reconstruct.label_excess(_attempts_from_events(spark, sf_dir))
-    )
-    return UsageApi(spark, cube)
+    return UsageApi(spark, usage_cube_hourly(spark, sf_dir))
 
 
 def cmd_api(args: argparse.Namespace) -> int:

@@ -16,7 +16,7 @@ Reference quirks preserved exactly (SURVEY §4):
   **no** buckets (not even started/finished); an attempt finishing
   exactly on an hour boundary books its ``finished`` flag into the
   *preceding* hour (the boundary bucket itself is never emitted).
-- ``cpuMinutes`` and ``spilledRecords`` are prorated by
+- CPU time and ``spilledRecords`` are prorated by
   ``overlap/(end-start)``; ``spilledRecords`` is truncated to a long
   *per bucket* (the Java ``(long)`` cast, ComputeUsagePerHour.java:315).
 - ``reduceShuffleBytes`` is **not** prorated — the full counter value
@@ -25,6 +25,12 @@ Reference quirks preserved exactly (SURVEY §4):
   :324-332.
 - hour truncation is GMT (``timeZone`` static, :60), so bucketing is
   pure epoch-ms arithmetic — no calendar, no DST.
+
+Measure units: the reference's double ``elapsedMinutes``/``cpuMinutes``
+are stored as exact integer ``elapsedMs``/``cpuMsProrated`` (the
+prorated CPU floored per bucket), so the cube has one format with
+order-independent sums. The serving roll-up derives minutes at query
+time (plans/metrics.py).
 
 Deliberate deviation: the reference THROWS on ``finishTime <
 startTime`` (ComputeUsagePerHour.java:275-278), killing the whole
@@ -47,15 +53,6 @@ HOUR_MS = 3_600_000
 
 #: cube dimension columns (Stats.avsc:24-50 AttemptStatsKey)
 KEY_COLS = ("user", "time", "cluster", "excess", "type", "status")
-#: cube measure columns (Stats.avsc:52-64 AttemptStatsValue)
-MEASURE_COLS = (
-    "started",
-    "finished",
-    "elapsedMinutes",
-    "cpuMinutes",
-    "spilledRecords",
-    "reduceShuffleBytes",
-)
 
 
 def filter_usable_attempts(attempts: DataFrame) -> DataFrame:
@@ -120,37 +117,26 @@ def explode_attempt_hours(attempts: DataFrame) -> DataFrame:
         # inclusive boundary tests (ComputeUsagePerHour.java:324-332)
         ((bucket_end >= start) & (start >= bucket)).cast("int").alias("started"),
         ((bucket_end >= end) & (end >= bucket)).cast("int").alias("finished"),
-        (overlap / 60000.0).alias("elapsedMinutes"),
-        (pct * F.col("_cpu") / 60000.0).alias("cpuMinutes"),
         # Java (long) cast truncates toward zero; operands are >= 0.
         F.floor(pct * F.col("_spilled")).cast("long").alias("spilledRecords"),
         F.col("_shuffle").alias("reduceShuffleBytes"),
-        # Exact integer twins of the minutes measures: summing these is
-        # order-independent (reproducible on any cluster) where double
-        # minutes are not. elapsedMs*1/60000 == elapsedMinutes.
+        # Exact integer ms, not the reference's double minutes: summing
+        # these is order-independent (reproducible on any cluster)
+        # where double minutes are not.
         overlap.cast("long").alias("elapsedMs"),
         F.floor(pct * F.col("_cpu")).cast("long").alias("cpuMsProrated"),
     )
 
 
-def aggregate_usage(per_hour_rows: DataFrame) -> DataFrame:
-    """A3 — final sum per cube key (ComputeUsagePerHour.java:393-446).
-    Spark ``sum`` is null-skipping like the reference's
-    null-preserving pairwise adds: all-null groups stay null."""
-    return per_hour_rows.groupBy(*KEY_COLS).agg(
-        F.sum("started").cast("int").alias("started"),
-        F.sum("finished").cast("int").alias("finished"),
-        F.sum("elapsedMinutes").alias("elapsedMinutes"),
-        F.sum("cpuMinutes").alias("cpuMinutes"),
-        F.sum("spilledRecords").alias("spilledRecords"),
-        F.sum("reduceShuffleBytes").alias("reduceShuffleBytes"),
-    )
-
-
 def aggregate_usage_exact(per_hour_rows: DataFrame) -> DataFrame:
-    """A3 on the exact-integer measure twins (ms instead of minutes):
-    bit-identical sums regardless of partitioning / combine order, so
-    a distributed run and a single-threaded oracle always agree."""
+    """A3 — final sum per cube key (ComputeUsagePerHour.java:393-446),
+    the one hourly-cube aggregator: batch, incremental refresh,
+    streaming upsert and serving all read its schema. Measures are
+    exact integers (ms instead of minutes), so sums are bit-identical
+    regardless of partitioning / combine order and a distributed run
+    and a single-threaded oracle always agree. Spark ``sum`` is
+    null-skipping like the reference's null-preserving pairwise adds:
+    all-null groups stay null."""
     return per_hour_rows.groupBy(*KEY_COLS).agg(
         F.sum("started").cast("long").alias("started"),
         F.sum("finished").cast("long").alias("finished"),
@@ -158,25 +144,4 @@ def aggregate_usage_exact(per_hour_rows: DataFrame) -> DataFrame:
         F.sum("cpuMsProrated").alias("cpuMsProrated"),
         F.sum("spilledRecords").alias("spilledRecords"),
         F.sum("reduceShuffleBytes").alias("reduceShuffleBytes"),
-    )
-
-
-def build_usage_per_hour(attempts: DataFrame) -> DataFrame:
-    """A1+A2+A3 — attempts → hourly usage cube."""
-    return aggregate_usage(explode_attempt_hours(filter_usable_attempts(attempts)))
-
-
-def write_usage_per_hour(cube: DataFrame, path: str) -> None:
-    """S6/S7 — partitioned, atomic-enough materialization. The
-    reference stages output then renames
-    (mapreduce/lib/job/StagedOutputJob.java:170-214); Spark's file
-    committer gives the same visibility semantics, and dynamic
-    partition overwrite replaces only rewritten (cluster, year, day)
-    partitions — the Delta-style incremental refresh path (I1-I5)."""
-    (
-        cube.withColumn("year", F.year("time"))
-        .withColumn("day", F.date_format("time", "MMdd"))
-        .write.mode("overwrite")
-        .partitionBy("cluster", "year", "day")
-        .parquet(path)
     )

@@ -11,6 +11,11 @@ Mirrors server/app.rb:
 
 :mod:`white_elephant_spark.server` wraps these 1:1 as a listening
 ``ThreadingHTTPServer`` (``python -m white_elephant_spark serve``).
+``UsageApi`` serves the one hourly-cube format, the exact-integer
+cube of operators/usage.py ``aggregate_usage_exact``: what the
+``usage_cube_hourly`` build returns, and what ``incremental.read_cube``
+reads back after a refresh or a streaming upsert. ``rollup_by_time``
+reports its ms measures in minutes.
 Spark builds each memoized value with one job; replies are shaped on
 the driver from those values, as the reference serves from its
 JVM-heap memo (usage_data.rb:29,442-454):
@@ -88,7 +93,10 @@ class UsageApi:
         def build() -> dict[str, dict[datetime, float]]:
             out: dict[str, dict[datetime, float]] = {}
             for r in rollup_by_time(self.cube, metric, cluster, unit, zone).collect():
-                out.setdefault(r["userName"], {})[r["bucket"]] = r["value"]
+                # An all-NULL sum (no CPU counter) zero-fills like a
+                # missing bucket, as in serving.timeseries.
+                if r["value"] is not None:
+                    out.setdefault(r["userName"], {})[r["bucket"]] = r["value"]
             return out
 
         return self.cache.get_or_build((cluster, unit, zone, metric), build)

@@ -11,6 +11,13 @@ and their resolution to WHERE predicates + a measure column
     WHERE cluster = ? [AND type/status/excess = ?]
     GROUP BY userName, <time-expr>
 
+Each metric's measure names a column of the one hourly cube
+(operators/usage.py ``aggregate_usage_exact``): ``elapsedMs``,
+``cpuMsProrated``, ``started``, ``finished`` or
+``reduceShuffleBytes``. The reference's UI reports elapsed and CPU
+time in minutes, so the roll-up derives minutes from the two ms
+measures in its projection; the cube stores no minutes column.
+
 The dense-axis gap-fill (W6/W7) and per-user/aggregated series
 shaping (A12, server/app.rb:94-102) live in plans/serving.py and
 plans/api.py.
@@ -30,26 +37,29 @@ from white_elephant_spark.functions.compat import dec
 @dataclass(frozen=True)
 class Metric:
     name: str
-    measure: str  # cube measure column (data_key_for_type, usage_data.rb:244-266)
+    measure: str  # exact cube column (data_key_for_type, usage_data.rb:244-266)
     type_eq: str | None = None  # predicate on `type` (where_for_type)
     status_eq: str | None = None  # predicate on `status`
     excess_eq: bool | None = None  # predicate on `excess`
 
 
+#: measures stored in ms that the roll-up reports in minutes
+_MS_MEASURES = frozenset({"elapsedMs", "cpuMsProrated"})
+
 # usage_data.rb:144-192 (predicates) + :244-266 (measures).
 METRICS: dict[str, Metric] = {
     m.name: m
     for m in [
-        Metric("minutesTotal", "elapsedMinutes"),
-        Metric("minutesMap", "elapsedMinutes", type_eq="MAP"),
-        Metric("minutesReduce", "elapsedMinutes", type_eq="REDUCE"),
-        Metric("minutesExcessTotal", "elapsedMinutes", excess_eq=True),
-        Metric("minutesExcessMap", "elapsedMinutes", type_eq="MAP", excess_eq=True),
-        Metric("minutesExcessReduce", "elapsedMinutes", type_eq="REDUCE", excess_eq=True),
-        Metric("minutesSuccess", "elapsedMinutes", status_eq="SUCCESS"),
-        Metric("minutesFailed", "elapsedMinutes", status_eq="FAILED"),
-        Metric("minutesKilled", "elapsedMinutes", status_eq="KILLED"),
-        Metric("cpuTotal", "cpuMinutes"),
+        Metric("minutesTotal", "elapsedMs"),
+        Metric("minutesMap", "elapsedMs", type_eq="MAP"),
+        Metric("minutesReduce", "elapsedMs", type_eq="REDUCE"),
+        Metric("minutesExcessTotal", "elapsedMs", excess_eq=True),
+        Metric("minutesExcessMap", "elapsedMs", type_eq="MAP", excess_eq=True),
+        Metric("minutesExcessReduce", "elapsedMs", type_eq="REDUCE", excess_eq=True),
+        Metric("minutesSuccess", "elapsedMs", status_eq="SUCCESS"),
+        Metric("minutesFailed", "elapsedMs", status_eq="FAILED"),
+        Metric("minutesKilled", "elapsedMs", status_eq="KILLED"),
+        Metric("cpuTotal", "cpuMsProrated"),
         Metric("totalStarted", "started"),
         Metric("mapStarted", "started", type_eq="MAP"),
         Metric("reduceStarted", "started", type_eq="REDUCE"),
@@ -93,11 +103,17 @@ def rollup_by_time(
     """A4 — the ``query_by_time`` roll-up (usage_data.rb:525-645):
     filter by cluster + metric predicates, bucket `time` by
     unit/zone, sum the metric's measure per (userName, bucket).
+    Elapsed and CPU time are summed in minutes, the unit the
+    reference's UI reports.
 
     The measure sum goes through DECIMAL (compat convention) so the
-    distributed result is order-independent.
+    distributed result is order-independent. Minutes are rounded to
+    DECIMAL per cube row, before the sum.
     """
     metric = METRICS[metric_name]
+    value = F.col(metric.measure)
+    if metric.measure in _MS_MEASURES:
+        value = value / 60000.0
     df = usage
     if cluster is not None:
         df = df.filter(F.col("cluster") == cluster)
@@ -107,5 +123,5 @@ def rollup_by_time(
             F.col("user").alias("userName"),
             tu.bucket(F.col("time"), unit, zone).alias("bucket"),
         )
-        .agg(F.sum(dec(F.col(metric.measure))).cast("double").alias("value"))
+        .agg(F.sum(dec(value)).cast("double").alias("value"))
     )

@@ -162,21 +162,12 @@ def usage_cube_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cube_df(spark, sf_dir)
 
 
-_EXACT_MEASURE = {
-    "elapsedMinutes": "elapsedMs",
-    "cpuMinutes": "cpuMsProrated",
-    "started": "started",
-    "finished": "finished",
-    "reduceShuffleBytes": "reduceShuffleBytes",
-}
-
-
 @register(
     "usage_metric_catalog",
     oracle=f"""
 WITH {_CUBE_CTE.lstrip()}
 SELECT {', '.join(
-    f"CAST(SUM(CASE WHEN {metric_predicate_sql(m)} THEN {_EXACT_MEASURE[m.measure]} ELSE 0 END) AS BIGINT) AS {m.name}"
+    f"CAST(SUM(CASE WHEN {metric_predicate_sql(m)} THEN {m.measure} ELSE 0 END) AS BIGINT) AS {m.name}"
     for m in METRICS.values()
 )}
 FROM cube_t WHERE cluster = 'alpha'
@@ -193,7 +184,7 @@ def usage_metric_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cube.agg(
         *[
             F.sum(
-                F.when(metric_predicate(m), F.col(_EXACT_MEASURE[m.measure])).otherwise(0)
+                F.when(metric_predicate(m), F.col(m.measure)).otherwise(0)
             )
             .cast("long")
             .alias(m.name)

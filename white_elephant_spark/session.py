@@ -15,9 +15,13 @@ master/config through ``extra_conf`` or spark-submit.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # Session time zone is pinned to UTC: the reference stores epoch-ms
 # UTC and re-buckets per-query with explicit zone arguments
@@ -113,12 +117,14 @@ def persist_reuse(df, level=None):
     (``_release_persists``) / by ``spark.catalog.clearCache()``, and a
     fresh build after a release re-persists normally.
 
-    Falls back to a plain ``persist`` if the (JVM-internal, stable
-    since 2.x) CacheManager probe is unavailable."""
+    Falls back to a plain ``persist``, logged, if the (JVM-internal,
+    stable since 2.x) CacheManager probe is unavailable: no JVM handle
+    on the frame (``AttributeError``) or a failed JVM call
+    (``Py4JError``)."""
     try:
         cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
         if cm.lookupCachedData(df._jdf).isDefined():
             return df
-    except Exception:
-        pass
+    except (AttributeError, Py4JError):
+        _log.warning("CacheManager probe failed; persisting without reuse", exc_info=True)
     return df.persist(level) if level is not None else df.persist()
