@@ -130,32 +130,18 @@ def test_planned_pairs_are_structural_not_string_keys(spark):
     assert inc.build_day_cube(att, [D(0)], pairs=set()).count() == 0
 
 
-def test_file_manifest_diff(tmp_path):
-    import os
-    import time
-
-    d = tmp_path / "in"
-    d.mkdir()
-    (d / "a.parquet").write_bytes(b"1")
-    (d / "b.parquet").write_bytes(b"2")
-    (d / "_hidden.parquet").write_bytes(b"x")  # S5: skipped
-    (d / "notes.txt").write_bytes(b"x")  # wrong suffix: skipped
-
-    mpath = str(tmp_path / "manifest.json")
-    new, changed, removed = inc.file_changes(str(d), inc.load_manifest(mpath))
-    assert {os.path.basename(p) for p in new} == {"a.parquet", "b.parquet"}
-    assert changed == set() and removed == set()
-
-    inc.save_manifest(mpath, inc.current_manifest(str(d)))
-    # touch a's mtime, delete b, add c
-    t = time.time() + 10
-    os.utime(d / "a.parquet", (t, t))
-    (d / "b.parquet").unlink()
-    (d / "c.parquet").write_bytes(b"3")
-    new, changed, removed = inc.file_changes(str(d), inc.load_manifest(mpath))
-    assert {os.path.basename(p) for p in new} == {"c.parquet"}
-    assert {os.path.basename(p) for p in changed} == {"a.parquet"}
-    assert {os.path.basename(p) for p in removed} == {"b.parquet"}
+def test_refresh_skips_built_days_on_uri_path(spark, tmp_path):
+    """I1 on a URI cube path: the partition probe must see the days a
+    first refresh built under ``file://...``, so a second refresh over
+    the same input rebuilds only the forced window, not all ten days
+    (a driver-local ``os.path`` probe finds nothing under a URI)."""
+    path = "file://" + str(tmp_path / "cube")
+    att = _attempts(spark, [(f"a{n}", n * DAY + HOUR, n * DAY + 2 * HOUR) for n in range(10)])
+    assert inc.refresh(att, path, num_days_forced=2) == [D(n) for n in range(10)]
+    first = sorted(map(tuple, inc.read_cube(spark, path).collect()))
+    assert inc.refresh(att, path, num_days_forced=2) == [D(8), D(9)]
+    assert sorted(map(tuple, inc.read_cube(spark, path).collect())) == first
+    assert len(first) == 10
 
 
 def test_hadoopfs_listing_matches_local(spark, tmp_path):

@@ -113,7 +113,9 @@ def test_df_save_load_roundtrip(spark, tmp_path, disk_store):
     assert len(calls) == 1 and rows1 == rows2 == [(1, "a"), (2, "b"), (3, None)]
 
 
-def test_corrupt_artifact_retrains(spark, tmp_path, disk_store):
+def test_corrupt_artifact_retrains(spark, tmp_path, disk_store, caplog):
+    import logging
+
     (tmp_path / "tbl.parquet").write_text("corpus")
     calls = []
 
@@ -125,10 +127,15 @@ def test_corrupt_artifact_retrains(spark, tmp_path, disk_store):
     [d] = [p for p in disk_store.iterdir() if p.name.startswith("m-")]
     (d / "artifact.pkl").write_bytes(b"\x80garbage")  # half-written pickle
     _wipe_memo()
-    a = models.get_or_train(
-        spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True
-    )
-    assert a == [1, 2, 3] and len(calls) == 2  # silent retrain, no crash
+    with caplog.at_level(logging.WARNING, logger=models.__name__):
+        a = models.get_or_train(
+            spark, str(tmp_path), "tbl", "m", ("x-v1",), trainer, disk=True
+        )
+    assert a == [1, 2, 3] and len(calls) == 2  # retrain, no crash
+    # ... but not silent: one WARNING naming the entry, with the load error
+    recs = [r for r in caplog.records if r.name == models.__name__]
+    assert [r.levelno for r in recs] == [logging.WARNING]
+    assert "'m'" in recs[0].getMessage() and recs[0].exc_info is not None
 
     # truncated meta.json → treated as absent → retrain
     (d / "meta.json").write_text('{"version":')

@@ -46,6 +46,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import pickle
 import re
@@ -57,6 +58,8 @@ import weakref
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 __all__ = [
     "get_or_train",
@@ -218,10 +221,16 @@ def _prune(current_app: str) -> None:
     for k in dead:
         v = _MEMO.pop(k)
         if isinstance(v, DataFrame):
-            try:
-                v.unpersist()
-            except Exception:
-                pass
+            _unpersist(v, k[2])
+
+
+def _unpersist(df: DataFrame, name: str) -> None:
+    """Best-effort release of a memoized DataFrame's cached blocks: a
+    failure (e.g. its application is gone) is logged, not raised."""
+    try:
+        df.unpersist()
+    except Exception:
+        _log.warning("could not unpersist registry artifact %r", name, exc_info=True)
 
 
 def clear_session(spark: SparkSession) -> None:
@@ -230,10 +239,7 @@ def clear_session(spark: SparkSession) -> None:
     for k in [k for k in _MEMO if k[0] == sk]:
         v = _MEMO.pop(k)
         if isinstance(v, DataFrame):
-            try:
-                v.unpersist()
-            except Exception:
-                pass
+            _unpersist(v, k[2])
 
 
 def _disk_dir(
@@ -393,7 +399,7 @@ def _gc_once() -> None:
     try:
         gc_disk()
     except Exception:
-        pass
+        _log.warning("model store GC failed", exc_info=True)
 
 
 def get_or_train(
@@ -474,7 +480,9 @@ def get_or_train(
                 with open(os.path.join(d, "artifact.pkl"), "rb") as f:
                     artifact = pickle.load(f)
         except Exception:
-            artifact = None  # corrupt/incompatible: retrain below
+            # corrupt/incompatible: retrain below
+            _log.warning("unreadable artifact %s for %r; retraining", d, name, exc_info=True)
+            artifact = None
 
     served_from_disk = artifact is not None
     if artifact is None:
@@ -498,13 +506,11 @@ def get_or_train(
                 if load is not None and isinstance(artifact, DataFrame):
                     # Serve the parquet scan, not the build pipeline:
                     # a post-clearCache recompute is then a file read.
-                    try:
-                        artifact.unpersist()
-                    except Exception:
-                        pass
+                    _unpersist(artifact, name)
                     artifact = load(spark, d)
             except Exception:
-                pass  # disk store is an optimization, never a failure
+                # disk store is an optimization, never a failure
+                _log.warning("could not store artifact %r at %s", name, d, exc_info=True)
             finally:
                 if tmp is not None:  # failed save: no orphan .tmp-* dirs
                     shutil.rmtree(tmp, ignore_errors=True)

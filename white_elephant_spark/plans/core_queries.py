@@ -340,11 +340,11 @@ def topk_users_other(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Dense time axis + gap fill (W6/W7: usage_data.rb:291-440,82-86):
-# attested through the serving-layer queries that exercise
-# plans/serving.dense_axis on real axes — usage_json_api (weekly) and
-# usage_csv_table_days (daily). The former standalone
-# dense_hour_axis_fill slot was folded away to stay inside the
-# driver's 50-query check budget.
+# attested through the serving-layer queries, which answer through
+# UsageApi and so exercise plans/serving.dense_axis on real axes —
+# usage_json_api (weekly) and usage_csv_table_days (daily). The former
+# standalone dense_hour_axis_fill slot was folded away to stay inside
+# the driver's 50-query check budget.
 # --------------------------------------------------------------------------
 
 

@@ -15,20 +15,30 @@ S1/S5/P9/J3/J4/O1 (raw_logfile_pipeline — incl. hidden-file poison the scan mu
 (usage_csv_table_days, usage_json_api, incremental_cube_refresh,
 streaming_cube_refresh), S2/P6/J8 (conf_parse_join).
 
+The two serving queries run the served code: ``__main__._serving_api``
+builds the ``UsageApi`` that ``serve``/``api`` answer from, over the
+``usage_cube_hourly`` cube, and the queries flatten its ``/api/usage``
+and ``/api/table`` replies into scalar rows. Their oracles re-derive
+the replies from the base tables with the served arithmetic.
+
 Numeric convention: measures are exact integers (ms / counts) so the
 distributed Spark sums and single-threaded DuckDB sums are
 bit-identical; the double proration factor is applied per-bucket with
 the identical operation order in both engines, then floored to a long.
+Served minutes follow ``rollup_by_time``: rounded to DECIMAL(27,4) per
+cube row, summed exactly, reported as DOUBLE.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from white_elephant_spark.functions import timeunits as tu
+from white_elephant_spark.functions.compat import dec, sql_dsum
+from white_elephant_spark.__main__ import _serving_api
 from white_elephant_spark.operators import parse, reconstruct, usage
 from white_elephant_spark.plans.metrics import METRICS, metric_predicate, metric_predicate_sql
 from white_elephant_spark.plans.registry import register
@@ -397,14 +407,20 @@ def reconstruct_jobs_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Serving layer: dense-axis timeseries + CSV table (§3.2-3.3)
+# Serving layer: /api/usage and /api/table through UsageApi (§3.2-3.3)
 # --------------------------------------------------------------------------
 
 _SEL_USERS = [f"u{i}" for i in range(5)]
 _AGG_USERS = [f"u{i}" for i in range(5, 17)]
+_CSV_USERS = [f"u{i}" for i in range(4)]
 _WIDE_START = 1577836800000  # 2020-01-01 UTC — clamped to cube range
 _WIDE_END = 1893456000000  # 2030-01-01 UTC
 _LA = "America/Los_Angeles"
+_OTHER = "__other__"
+
+
+def _sql_list(users: list[str]) -> str:
+    return ", ".join(repr(u) for u in users)
 
 
 def _axis_sql_weeks(zone: str) -> str:
@@ -433,100 +449,6 @@ axis AS (
 """
 
 
-_WEEKLY_ORACLE = f"""
-WITH {_CUBE_CTE.lstrip().rstrip().rstrip(',')},
-{_axis_sql_weeks(_LA).strip().lstrip()},
-series AS (
-  SELECT "user" AS userName, {tu.bucket_sql('time', 'WEEKS', _LA)} AS bucket,
-         CAST(SUM(elapsedMs) AS BIGINT) AS value
-  FROM cube_t WHERE cluster = 'alpha' GROUP BY 1, 2
-),
-sel AS (
-  SELECT * FROM series WHERE userName IN ({', '.join(repr(u) for u in _SEL_USERS)})
-  UNION ALL
-  SELECT '__other__' AS userName, bucket, CAST(SUM(value) AS BIGINT) AS value
-  FROM series WHERE userName IN ({', '.join(repr(u) for u in _AGG_USERS)})
-  GROUP BY bucket
-),
-au AS (
-  SELECT axis.bucket, u.userName
-  FROM axis, (SELECT unnest([{', '.join(repr(u) for u in _SEL_USERS + ['__other__'])}]) AS userName) u
-)
-SELECT au.userName, au.bucket, CAST(COALESCE(sel.value, 0) AS BIGINT) AS value
-FROM au LEFT JOIN sel ON au.bucket = sel.bucket AND au.userName = sel.userName
-"""
-
-
-def _fused_hour_rows(spark: SparkSession, sf_dir: str, cluster: str) -> DataFrame:
-    """Per-hour exploded rows for one cluster with the cube's full-
-    fidelity labeling, but WITHOUT materializing the 6-dim cube
-    aggregation in between: a serving roll-up only needs
-    (user, time, elapsedMs), and summing exploded rows directly is
-    algebraically identical to cube-then-rollup (the oracle still
-    derives through cube_t — same totals). This is the materialized-
-    view rewrite a production deployment gets by reading the stored
-    cube; here it removes one full shuffle from the query chain.
-    Excess labeling runs *before* the cluster filter (a task's
-    attempts can span clusters in this corpus, and J5 is a per-task
-    property)."""
-    att = reconstruct.label_excess(_attempts_from_events(spark, sf_dir))
-    att = att.filter(F.col("cluster") == cluster)
-    return usage.explode_attempt_hours(usage.filter_usable_attempts(att))
-
-
-def _served_hour_rows(spark: SparkSession, sf_dir: str, cluster: str) -> DataFrame:
-    """:func:`_fused_hour_rows` through the model registry — the
-    reference's own serving architecture: the batch pipeline WRITES
-    the per-hour usage data, the server only READS it
-    (server/app/usage_data.rb loads what hadoop/ComputeUsagePerHour
-    produced). The serving-layer queries (`usage_json_api`,
-    `usage_csv_table_days`) therefore read the registry-stored hour
-    rows; `usage_cube_hourly` keeps building the cube from raw events
-    — it IS the build benchmark."""
-    from white_elephant_spark import models
-
-    return models.get_or_train(
-        spark,
-        sf_dir,
-        "events",
-        "usage_hour_rows",
-        (cluster, "hourrows-v1"),
-        lambda: _fused_hour_rows(spark, sf_dir, cluster),
-        save=models.df_save,
-        load=models.df_load(),
-    )
-
-
-def usage_timeseries_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§3.2 end-to-end: weekly minutesTotal series for 5 users plus
-    the aggregated '__other__' series, dense WEEKS axis in LA time
-    with the reference's shrink-a-week edge rule, zero-filled.
-    Driver-verified through ``usage_json_api``, which is this series
-    plus the A13 per-user window total (same rows, superset
-    columns)."""
-    from white_elephant_spark.plans import serving
-
-    # Registry-served hour rows (see _served_hour_rows); persisted
-    # because two consumers read them (the weekly series and the A10
-    # clamp aggregate).
-    rows = persist_reuse(_served_hour_rows(spark, sf_dir, "alpha"))
-    series = (
-        rows.groupBy(
-            F.col("user").alias("userName"),
-            tu.bucket(F.col("time"), "WEEKS", _LA).alias("bucket"),
-        )
-        .agg(F.sum("elapsedMs").alias("value"))
-    )
-    axis = serving.dense_axis(
-        spark, "WEEKS", _LA, _WIDE_START, _WIDE_END, clamp=serving.clamp_range(rows)
-    )
-    out = serving.timeseries(series, axis, _SEL_USERS, _AGG_USERS)
-    return out.select("userName", "bucket", F.col("value").cast("long").alias("value"))
-
-
-_CSV_USERS = [f"u{i}" for i in range(4)]
-
-
 def _axis_sql_days(zone: str) -> str:
     loc = lambda ms: (  # noqa: E731
         f"CAST(((make_timestamp({ms} * 1000)) AT TIME ZONE 'UTC') AT TIME ZONE '{zone}' AS DATE)"
@@ -548,44 +470,104 @@ axis AS (
 """
 
 
+def _series_sql(cluster: str, unit: str) -> str:
+    """DuckDB twin of ``rollup_by_time(cube, "minutesTotal", cluster,
+    unit, _LA)``: minutes rounded to DECIMAL(27,4) per cube row, summed,
+    reported as DOUBLE."""
+    return f"""
+series AS (
+  SELECT "user" AS userName, {tu.bucket_sql('time', unit, _LA)} AS bucket,
+         {sql_dsum('elapsedMs / 60000.0::DOUBLE')} AS value
+  FROM cube_t WHERE cluster = '{cluster}' GROUP BY 1, 2
+)
+"""
+
+
+@register(
+    "usage_json_api",
+    oracle=f"""
+WITH {_CUBE_CTE.lstrip().rstrip().rstrip(',')},
+{_axis_sql_weeks(_LA).strip()},
+{_series_sql('alpha', 'WEEKS').strip()},
+other AS (
+  -- UsageApi.usage's agg[i] += v: a left fold in request order
+  SELECT bucket,
+         list_reduce(list(value ORDER BY list_position([{_sql_list(_AGG_USERS)}], userName)),
+                     (a, b) -> a + b) AS value
+  FROM series WHERE userName IN ({_sql_list(_AGG_USERS)})
+  GROUP BY bucket
+),
+sel AS (
+  SELECT userName, bucket, value FROM series WHERE userName IN ({_sql_list(_SEL_USERS)})
+  UNION ALL
+  SELECT '{_OTHER}' AS userName, bucket, value FROM other
+),
+dense AS (
+  SELECT au.userName, epoch_ms(au.bucket) AS bucket, COALESCE(sel.value, 0.0::DOUBLE) AS value
+  FROM (SELECT axis.bucket, u.userName
+        FROM axis, (SELECT unnest([{_sql_list(_SEL_USERS + [_OTHER])}]) AS userName) u) au
+  LEFT JOIN sel ON au.bucket = sel.bucket AND au.userName = sel.userName
+)
+SELECT userName, bucket, value,
+       CAST(SUM(CAST(value AS DECIMAL(27,4))) OVER (PARTITION BY userName) AS DOUBLE) AS total
+FROM dense
+""",
+    tags=("serving", "sink", "json"),
+)
+def usage_json_api(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S10+A13 — the ``/api/usage`` reply (server/app.rb:44-107) exactly
+    as :meth:`UsageApi.usage` serves it: weekly minutesTotal in LA time
+    on ``alpha``, five users shown and twelve aggregated, flattened to
+    one row per (user, bucket). ``bucket`` is the reply's ``times``
+    entry (epoch ms), the aggregated series is the row ``__other__``,
+    and ``total`` is the A13 per-user window total, summed through
+    DECIMAL (functions/compat.py). The rows are scalar-typed because
+    the driver's hash gate cannot canonicalize list-typed columns."""
+    reply = _serving_api(spark, sf_dir).usage(
+        _WIDE_START, _WIDE_END, "WEEKS", _LA, _SEL_USERS, "alpha",
+        users_to_aggregate=_AGG_USERS,
+    )
+    series = [(s["user"], s["data"]) for s in reply["users"]]
+    if reply["users_aggregated"] is not None:
+        series.append((_OTHER, reply["users_aggregated"]))
+    rows = [(u, t, v) for u, data in series for t, v in zip(reply["times"], data)]
+    out = spark.createDataFrame(rows, "userName string, bucket long, value double")
+    return out.withColumn(
+        "total", F.sum(dec("value")).over(Window.partitionBy("userName")).cast("double")
+    )
+
+
 @register(
     "usage_csv_table_days",
     oracle=f"""
 WITH {_CUBE_CTE.lstrip().rstrip().rstrip(',')},
-{_axis_sql_days(_LA).strip().lstrip()},
-series AS (
-  SELECT "user" AS userName, {tu.bucket_sql('time', 'DAYS', _LA)} AS bucket,
-         SUM(elapsedMs) / 60000.0 AS value
-  FROM cube_t WHERE cluster = 'beta' GROUP BY 1, 2
-)
+{_axis_sql_days(_LA).strip()},
+{_series_sql('beta', 'DAYS').strip()}
 SELECT strftime(((CAST(axis.bucket AS TIMESTAMP)) AT TIME ZONE 'UTC') AT TIME ZONE '{_LA}', '%Y-%m-%d') AS time,
        {', '.join(
-           f"COALESCE(any_value(CASE WHEN userName = '{u}' THEN value END), 0.0) / 60.0 AS {u}"
+           f"printf('%g', COALESCE(any_value(CASE WHEN userName = '{u}' THEN value END), 0.0::DOUBLE)"
+           f" / 60.0::DOUBLE) AS {u}"
            for u in _CSV_USERS
        )}
 FROM axis LEFT JOIN series
-  ON axis.bucket = series.bucket AND series.userName IN ({', '.join(repr(u) for u in _CSV_USERS)})
+  ON axis.bucket = series.bucket AND series.userName IN ({_sql_list(_CSV_USERS)})
 GROUP BY axis.bucket
 """,
     tags=("serving", "csv"),
 )
 def usage_csv_table_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S11 — /api/table CSV shape: daily LA buckets as local
-    %Y-%m-%d, one column per user, minutes→hours (÷60)."""
-    from white_elephant_spark.plans import serving
-
-    rows = _served_hour_rows(spark, sf_dir, "beta")
-    series = (
-        rows.groupBy(
-            F.col("user").alias("userName"),
-            tu.bucket(F.col("time"), "DAYS", _LA).alias("bucket"),
-        )
-        .agg((F.sum("elapsedMs") / 60000.0).alias("value"))
+    """S11 — the ``/api/table`` CSV (server/app.rb:110-157) exactly as
+    :meth:`UsageApi.table_csv` serves it: daily LA buckets on ``beta``
+    as local %Y-%m-%d, one column per user, minutes→hours (÷60). Each
+    CSV line is one row of its string cells."""
+    csv = _serving_api(spark, sf_dir).table_csv(
+        _WIDE_START, _WIDE_END, "DAYS", _LA, _CSV_USERS, "beta"
     )
-    axis = serving.dense_axis(
-        spark, "DAYS", _LA, _WIDE_START, _WIDE_END, clamp=serving.clamp_range(rows)
+    header, *lines = csv.splitlines()
+    return spark.createDataFrame(
+        [tuple(line.split(",")) for line in lines],
+        ", ".join(f"{c} string" for c in header.split(",")),
     )
-    return serving.csv_table(series, axis, _CSV_USERS, _LA, to_hours=True)
 
 
 # --------------------------------------------------------------------------
@@ -841,8 +823,7 @@ def jsonl_quality_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg, uniqueness, FK anti-join + its total, the histogram's
     # min/max, good_total, the final bucket agg) — persist so the
     # text+JSON parse runs once and every later action reads the
-    # cached rows (guide §5: reuse beats recompute; same pattern as
-    # usage_timeseries_weekly's persisted hour rows).
+    # cached rows (guide §5: reuse beats recompute).
     good = persist_reuse(good)
     total_lines = o.count()
     quarrows = (
@@ -1028,36 +1009,6 @@ def conf_parse_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("configuration", "mapreduce.job.queuename").alias("queue"),
         F.element_at("configuration", "mapreduce.job.user.name").alias("confUser"),
         F.element_at("configuration", "broken").alias("broken"),
-    )
-
-
-@register(
-    "usage_json_api",
-    oracle=f"""
-SELECT userName, bucket, value,
-       CAST(SUM(value) OVER (PARTITION BY userName) AS BIGINT) AS total
-FROM ({_WEEKLY_ORACLE.strip()})
-""",
-    tags=("serving", "sink", "json"),
-)
-def usage_json_api(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10+A13 — the ``/api/usage`` response (server/app.rb:44-107) in
-    its exploded, engine-side shape: one row per (user, bucket) over
-    the shared dense axis, with ``total`` the A13 per-user grand total
-    repeated on every row. The array assembly into ``{{times, users:
-    [{{user, data}}]}}`` happens at the serving edge
-    (:meth:`white_elephant_spark.plans.api.UsageApi.usage`), keeping
-    the query result scalar-typed (hashable for the oracle gate —
-    list-typed columns can't be canonicalized by the driver)."""
-    from pyspark.sql.window import Window
-
-    dense = usage_timeseries_weekly(spark, sf_dir)
-    w = Window.partitionBy("userName")
-    return dense.select(
-        "userName",
-        "bucket",
-        "value",
-        F.sum("value").over(w).cast("long").alias("total"),
     )
 
 

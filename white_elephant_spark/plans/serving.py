@@ -19,10 +19,13 @@ Reproduces the reference's ``get_time_range`` dense-axis construction
 
 Axis generation is ``sequence``+``explode`` on one driver row —
 distributed, no Python loops; buckets stay naive-UTC instants.
-:func:`timeseries` and :func:`csv_table` are steps 3-4 as Spark plans
-(the registry's serving queries); the HTTP API (plans/api.py) instead
-collects the roll-up and the axis once per data generation and shapes
-replies on the driver.
+The served path (plans/api.py ``UsageApi``, which the registry's
+``usage_json_api``/``usage_csv_table_days`` call) uses the axis and
+the clamp, collects the roll-up once per data generation and shapes
+replies on the driver. :func:`timeseries` and :func:`csv_table` are
+steps 3-4 as Spark plans: the independent reference the serving
+differential (tests/test_serving_differential.py) checks those
+replies against, not registry plans.
 """
 
 from __future__ import annotations

@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from white_elephant_spark.sources.catalog import ensure_engine_confs
@@ -120,8 +121,8 @@ def bucketed_pair(
                 and _bucket_spec(spark, rt) == ((right_key,), num_buckets)
             ):
                 return ldf, rdf
-        except Exception:
-            pass
+        except AnalysisException:
+            pass  # not in the catalog yet: write them below
     ldf = write_bucketed(
         spark, left, lt, [left_key], num_buckets,
         sort_cols=[left_key], path=os.path.join(base_dir, tag, "l"),

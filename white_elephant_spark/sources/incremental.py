@@ -24,12 +24,13 @@ The reference's incremental machinery, re-expressed Spark-first:
 - **I3 changed-file reload** (server/app/usage_loader.rb:83-163) maps
   to the forced-window rebuild: a day partition is always recomputed
   *from scratch* out of all current input for that day, never
-  appended to, so reprocessing is idempotent.
+  appended to, so reprocessing is idempotent. The file-listing diff
+  itself is the streaming checkpoint (streaming/cube_stream.py).
 
-Storage: all directory/file probing goes through the listing
-abstraction (sources/listing.py) — ``LocalListing`` for tests,
-``HadoopFsListing`` for HDFS/S3/GCS/ABFS — so the incremental state
-survives object storage; the reference's equivalent probe is
+Storage: partition probing goes through the listing abstraction
+(sources/listing.py). :func:`refresh` uses ``HadoopFsListing``, so the
+incremental state works on local paths and on ``file://``, HDFS, S3,
+GCS or ABFS URIs alike; the reference's equivalent probe is
 ``FileSystem.exists`` (JobStatsProcessing.java:71-79).
 
 Scale: the refresh cost is O(days changed), not O(history). The input
@@ -49,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from white_elephant_spark.operators import usage
-from white_elephant_spark.sources.listing import Listing, LocalListing
+from white_elephant_spark.sources.listing import HadoopFsListing, Listing, LocalListing
 
 DAY_MS = 86_400_000
 
@@ -214,69 +215,26 @@ def write_day_partitions(cube: DataFrame, path: str) -> None:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def refresh(
-    attempts: DataFrame, path: str, num_days_forced: int = 5, listing: Listing | None = None
-) -> list[date]:
+def refresh(attempts: DataFrame, path: str, num_days_forced: int = 5) -> list[date]:
     """I1-I5 end to end: plan the day set from the input range and the
     existing partitions, rebuild exactly those day partitions from all
     current input, overwrite them atomically. Returns the days built.
     Re-running with unchanged input is a no-op beyond the forced
-    window and idempotent inside it."""
+    window and idempotent inside it. ``path`` may be a local path or
+    any URI the session's Hadoop configuration resolves; existing
+    partitions are probed through the Hadoop ``FileSystem`` API."""
     lo, hi = input_day_range(attempts)
     if lo is None:
         return []
     clusters = [
         r["cluster"] for r in attempts.select("cluster").distinct().collect()
     ]
-    pairs = plan_cluster_days(
-        lo, hi, clusters, existing_cluster_days(path, listing), num_days_forced
-    )
+    existing = existing_cluster_days(path, HadoopFsListing(attempts.sparkSession))
+    pairs = plan_cluster_days(lo, hi, clusters, existing, num_days_forced)
     days = sorted({d for _c, d in pairs})
     if days:
         write_day_partitions(build_day_cube(attempts, days, pairs=pairs), path)
     return days
-
-
-def load_manifest(manifest_path: str) -> dict[str, float]:
-    """I3 — the ``LoadedFiles`` table (server/app/usage_database.rb
-    :92-118): fileName → mtime of everything already ingested."""
-    import json
-
-    if not os.path.exists(manifest_path):
-        return {}
-    with open(manifest_path) as fh:
-        return json.load(fh)
-
-
-def save_manifest(manifest_path: str, manifest: dict[str, float]) -> None:
-    import json
-
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, manifest_path)  # atomic, like the staged rename (S7)
-
-
-def file_changes(
-    input_dir: str,
-    manifest: dict[str, float],
-    suffix: str = ".parquet",
-    listing: Listing | None = None,
-) -> tuple[set[str], set[str], set[str]]:
-    """I3 diff (server/app/usage_loader.rb:83-163): (new, changed,
-    removed) data files vs the manifest. Hidden files (``_*``/``.*``)
-    are skipped like the reference's S5 filter."""
-    current = current_manifest(input_dir, suffix, listing)
-    new = {p for p in current if p not in manifest}
-    changed = {p for p in current if p in manifest and current[p] != manifest[p]}
-    removed = {p for p in manifest if p not in current}
-    return new, changed, removed
-
-
-def current_manifest(
-    input_dir: str, suffix: str = ".parquet", listing: Listing | None = None
-) -> dict[str, float]:
-    return (listing or LocalListing()).walk_files(input_dir, suffix)
 
 
 def read_cube(spark: SparkSession, path: str) -> DataFrame:

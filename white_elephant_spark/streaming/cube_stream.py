@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from white_elephant_spark.operators import usage
+from white_elephant_spark.sources import incremental
 
 #: parsed + excess-labeled attempts, the input grain of the usage
 #: stage (ComputeUsagePerHour.java:232-255 consumes the same shape).
@@ -77,8 +78,9 @@ def streaming_usage_cube(
 def upsert_batch(batch: DataFrame, path: str) -> None:
     """I5 sink — merge one trigger's updated cube rows into the
     materialized cube: affected day partitions are rewritten as
-    (existing rows whose key was not updated) ∪ (updated rows), via
-    dynamic partition overwrite. ``localCheckpoint`` materializes the
+    (existing rows whose key was not updated) ∪ (updated rows), and
+    written by :func:`incremental.write_day_partitions` (dynamic
+    partition overwrite). ``localCheckpoint`` materializes the
     merge input so the write never scans the path it overwrites.
     At scale this is the ``MERGE`` pattern (Delta/Iceberg would
     replace the manual anti-join)."""
@@ -105,19 +107,7 @@ def upsert_batch(batch: DataFrame, path: str) -> None:
         out = keep.unionByName(batch.select(*keep.columns)).localCheckpoint(eager=True)
     else:
         out = batch
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # One task owns each (cluster, day) → one file per partition
-        # dir instead of shuffle_partitions × days tiny files.
-        (
-            out.repartition("cluster", "day")
-            .write.mode("overwrite")
-            .partitionBy("cluster", "day")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    incremental.write_day_partitions(out.drop("day"), path)
 
 
 def run_refresh(
